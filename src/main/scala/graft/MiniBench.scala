@@ -1,10 +1,11 @@
 package graft
 
-/** Multi-query micro-bench: `runMain graft.MiniBench <sfDir> <passes> <q1,q2,...>`
-  * — times a comma-separated list of catalog queries through the same
-  * noop-sink path as [[Bench]] in ONE session (one JVM/session startup
-  * for a whole config experiment, vs one `QBench` JVM per query). Each
-  * query gets one untimed warmup pass, then `passes` timed passes; the
+/** Catalog micro-bench: `runMain graft.MiniBench <sfDir> <passes> <q1,q2,...>`
+  * — times a comma-separated list of catalog queries (one is fine)
+  * through the same noop-sink path as [[Bench]] in ONE session (one
+  * JVM/session startup for a whole config experiment). Each query gets
+  * one warmup pass (timed and printed, not counted: it includes
+  * JIT/codegen warmup), then `passes` timed passes, each printed; the
   * reported stat is the MIN (the config-experiment question is intrinsic
   * cost, and load noise is additive — the [[Bench]] slowest-decile
   * rationale). Dev tool for plan iteration; the driver's numbers come
@@ -20,12 +21,15 @@ object MiniBench {
     require(bad.isEmpty, s"unknown queries: ${bad.mkString(", ")}")
     def runOne(name: String): Double = {
       val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save() // warmup
-      (1 to passes).map { _ =>
+      def timed(label: String): Double = {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+        val s = (System.nanoTime() - t0) / 1e9
+        println(f"[minibench] $name $label: $s%.3f s")
+        s
+      }
+      timed("warmup")
+      (1 to passes).map(i => timed(s"pass $i")).min
     }
     val results = names.map(n => n -> runOne(n))
     results.foreach { case (n, t) => println(f"[minibench] $n%-40s $t%8.3f s") }

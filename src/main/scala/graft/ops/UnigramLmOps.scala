@@ -255,33 +255,22 @@ object UnigramLmOps {
   def readVocab(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path).select(col("piece"), col("cnt"), col("cost_micro"))
 
-  private val vocabMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, (String, String)), String]
-
-  /** Train-and-persist ONCE per (session, corpus content, sourceKey) —
-    * the [[GraphOps.symmetricEdgesShared]] artifact-memo contract, but
-    * the memoized value is an ON-DISK path, not a cached relation: the
-    * first caller trains and writes the parquet artifact, later callers
-    * get the path and READ the frozen file (the production inference
-    * shape — the artifact outlives any session cache). The key folds in
-    * [[MemoFingerprint]] of the corpus relation, so a reused sourceKey
-    * over changed data re-trains instead of serving a stale
-    * vocabulary. */
+  /** Train-and-persist ONCE per (session, corpus content, sourceKey), a
+    * [[SessionArtifacts]] artifact whose value is an ON-DISK path, not a
+    * cached relation: the first caller trains and writes the parquet
+    * artifact, later callers get the path and READ the frozen file (the
+    * production inference shape — the artifact outlives any session
+    * cache). The vocabulary is keepPieces + alphabet rows. */
   def vocabArtifactShared(
       spark: org.apache.spark.sql.SparkSession, sourceKey: String,
-      corpus: DataFrame)(train: => DataFrame): String = {
-    vocabMemo.forEach { (key, _) =>
-      if (key._1.sparkContext.isStopped) vocabMemo.remove(key)
-    }
-    val key = (spark, (MemoFingerprint.of(corpus), sourceKey))
-    vocabMemo.computeIfAbsent(key, _ => {
+      corpus: DataFrame)(train: => DataFrame): String =
+    SessionArtifacts.shared("unigram.vocab", spark, corpus, sourceKey) {
       val path = java.nio.file.Files
         .createTempDirectory("graft-unigram-vocab")
         .resolve("vocab.parquet").toString
       writeVocab(train, path)
       path
-    })
-  }
+    }
 
   /** Fertility of a shard under a FROZEN persisted vocabulary — the
     * delta-scoring entry point (the q97/q184 persisted-screen shape):

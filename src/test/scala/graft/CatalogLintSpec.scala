@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Structural gate-compatibility lint over the WHOLE declared catalog.
   *
   * The external correctness harness compares engine output to the DuckDB
@@ -95,5 +97,25 @@ class CatalogLintSpec extends AnyFunSuite {
     val maxN = prefixes.filter(_ != "q06b").map(_.drop(1).toInt).max
     assert(m.get.group(1) == s"q$maxN",
       s"README range ends at ${m.get.group(1)}; catalog ends at q$maxN")
+  }
+
+  test("session-artifact caching lives only in ops/SessionArtifacts.scala") {
+    // one registry decides session-artifact policy (key, content
+    // fingerprint, stopped-session sweep, hit counting); a second
+    // hand-rolled memo map or counter anywhere else is a red test
+    val banned = "ConcurrentHashMap|isStopped|MemoHits|MemoFingerprint".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val registry = root.resolve("graft/ops/SessionArtifacts.scala")
+    val stream = java.nio.file.Files.walk(root)
+    val sources = try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally stream.close()
+    assert(sources.contains(registry), s"$registry not found")
+    val offenders = sources.filter(_ != registry).flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if banned.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"session-artifact caching outside SessionArtifacts:\n  ${offenders.mkString("\n  ")}")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.io.Tables
-import graft.ops.SimilarityOps
+import graft.ops.{SessionArtifacts, SimilarityOps}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -356,11 +356,11 @@ class SimilarityOpsSpec extends AnyFunSuite {
     // cosine equals brute force's, and per-query order is cosine desc.
     // nprobe/queryMod are SEARCH params, not training params, so this
     // call must reuse the trained-index memo the ADC call above built
-    val hits0 = SimilarityOps.pqIndexMemoHits.get()
+    val hits0 = SessionArtifacts.hits("similarity.kmeans-ivfpq")
     val refined = SimilarityOps.ivfPqKmeansRerankAnn(df, "vec_id", "embedding",
       dim = 4, kCoarse = 2, kmIters = 2, m = 2, ksub = 4, iters = 2,
       queryMod = 16, k = 3, nprobe = 2, rerank = 6).collect()
-    assert(SimilarityOps.pqIndexMemoHits.get() >= hits0 + 1,
+    assert(SessionArtifacts.hits("similarity.kmeans-ivfpq") >= hits0 + 1,
       "rerank must reuse the session-memoized trained index")
     val bf = SimilarityOps.annBruteForce(df, "vec_id", "embedding",
         queryMod = 16, k = 31)
